@@ -1,7 +1,7 @@
 """The local[1] leg of ``scaling_eff``: scan docs/s on one core, in its own
 process (a fresh JVM), over the same cached corpus. Prints one JSON line.
 
-    python3 perfbench/local1.py --workload full_scan --seed 1 --seconds 6
+    python3 perfbench/local1.py --workload full_scan --seed 1 --seconds 8
 """
 
 from __future__ import annotations

@@ -1,13 +1,14 @@
 """Extraction benchmark: one workload per run, seeded corpus, checked output.
 
-    python3 perfbench/run.py --workload full_scan --seed 1 --seconds 10 \
+    python3 perfbench/run.py --workload full_scan --seed 1 --seconds 8 \
         --trace 0
 
-Run from the repository root. The last line of standard output is one JSON
-object: {"correct", "attempted", "failed", "metrics"}. With ``--trace 0``
-the metrics are the end-to-end metrics of BENCHMARK.json; with
-``--trace 1`` they are its per-layer metrics. ``attempted``/``failed``
-count input documents. The exit code is non-zero when any check fails.
+Paths resolve from this file, so any working directory works. The last
+line of standard output is one JSON object: {"correct", "attempted",
+"failed", "metrics"}. With ``--trace 0`` the metrics are the end-to-end
+metrics of BENCHMARK.json; with ``--trace 1`` they are its per-layer
+metrics. ``attempted``/``failed`` count input documents. The exit code is
+non-zero when any check fails.
 Workloads and metrics are described in perfbench/WORKLOADS.md.
 """
 
