@@ -291,7 +291,7 @@ def _batch_stats(batches) -> dict:
     }
 
 
-IN_PROCESS_ROUNDS = 3
+IN_PROCESS_ROUNDS = 2
 
 
 def in_process_layers(corpus, mode: str):
