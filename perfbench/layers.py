@@ -5,12 +5,15 @@ program's modules: each named function is replaced, at every module that
 calls it, by a wrapper that records (name, parent, wall, CPU). Spans stay
 in memory; a layer's self time is its span minus its child spans.
 
-- Kernel layers run in-process over the same corpus, through a copy of
-  ``run_mode``'s mapper loop (``_coalesced`` -> ``_lines_from_batch`` ->
-  ``prepare_lines`` -> ``FLAT_MODES[mode]`` -> ``_batch_from_flat``). Its
-  output digest must equal the Spark run's, so this harness cannot drift
-  from the program. Untraced and traced runs alternate batch by batch;
-  the difference is the tracing overhead.
+- Kernel layers run in-process, through a copy of ``run_mode``'s mapper
+  loop (``_coalesced`` -> ``_lines_from_batch`` -> ``prepare_lines`` ->
+  ``FLAT_MODES[mode]`` -> ``_batch_from_flat``), over the batches Spark
+  builds for the workload: a probe ``mapInArrow`` over the workload's own
+  DataFrame records which documents arrive in which Arrow batch of which
+  task, and the in-process loop coalesces those same batches per task.
+  Its output digest must equal the Spark run's, so this harness cannot
+  drift from the program. Untraced and traced runs alternate batch by
+  batch; the difference is the tracing overhead.
 - Spark-side layers come from the local driver's monitoring REST API
   (task times, JVM CPU, GC, bytes) and from /proc (Python worker CPU).
 - Runner, io and manifest layers are spans around the functions the job
@@ -22,6 +25,7 @@ from __future__ import annotations
 
 import functools
 import glob
+import itertools
 import json
 import os
 import statistics
@@ -31,7 +35,9 @@ import threading
 import time
 import urllib.request
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 import procfs
@@ -76,6 +82,10 @@ JOB_SITES = [
     ("manifest", "check_compatible", "manifest.resume_plan"),
     ("manifest", "pending_buckets", "manifest.resume_plan"),
 ]
+
+# spans that wrap other layers: their self time is glue code no layer
+# covers, so trace.layer_sum_pct leaves it out
+WRAPPER_LAYERS = ("pipeline.prepare", "pipeline.mode")
 
 # per-layer self CPU metrics of the in-process run: metric -> layer
 CPU_METRICS = {
@@ -230,14 +240,66 @@ def patch_sites(rec: Recorder, sites) -> None:
 
 
 def _row_group_batches(path: str):
-    """A parquet file or directory as Spark's scan feeds it to the mapper:
-    one Arrow batch per row group (256 documents)."""
+    """A parquet file or directory read one row group at a time (256
+    documents), for runs that need no Spark session."""
     files = (sorted(glob.glob(os.path.join(path, "*.parquet")))
              if os.path.isdir(path) else [path])
     for f in files:
         pf = pq.ParquetFile(f)
         for i in range(pf.num_row_groups):
             yield from pf.read_row_group(i).to_batches()
+
+
+def _tag_batches(batches):
+    """Probe mapper: one (task, batch, row, doc_id) row per document, for
+    each Arrow batch Spark feeds the mapper."""
+    from pyspark import TaskContext
+
+    task = TaskContext.get().partitionId()
+    for i, b in enumerate(batches):
+        n = b.num_rows
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.full(n, task, np.int32)),
+             pa.array(np.full(n, i, np.int32)),
+             pa.array(np.arange(n, dtype=np.int32)), b.column("doc_id")],
+            names=["task", "batch", "row", "doc_id"])
+
+
+def spark_batch_ids(df) -> list[list[pa.Array]]:
+    """The Arrow batches Spark feeds a ``mapInArrow`` mapper over ``df``
+    (same plan, same ``maxRecordsPerBatch``), as doc_id arrays grouped by
+    task, in arrival order."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    return group_tagged(df.mapInArrow(
+        _tag_batches, "task int, batch int, row int, doc_id string"
+    ).toArrow())
+
+
+def group_tagged(t: pa.Table) -> list[list[pa.Array]]:
+    """``_tag_batches`` rows -> per task, one doc_id array per batch."""
+    t = t.take(pc.sort_indices(t, [("task", "ascending"),
+                                   ("batch", "ascending"),
+                                   ("row", "ascending")]))
+    keys = zip(t.column("task").to_pylist(), t.column("batch").to_pylist())
+    ids = t.column("doc_id").combine_chunks()
+    tasks: dict[int, list[pa.Array]] = {}
+    start = 0
+    for (task, _), rows in itertools.groupby(keys):
+        n = sum(1 for _ in rows)
+        tasks.setdefault(task, []).append(ids.slice(start, n))
+        start += n
+    return list(tasks.values())
+
+
+def rebuild_batches(table: pa.Table,
+                    tasks: list[list[pa.Array]]) -> list[list[pa.RecordBatch]]:
+    """Spark's input batches rebuilt from the corpus table: per task, one
+    RecordBatch of ``table``'s columns per doc_id array."""
+    ids = table.column("doc_id")
+    return [[table.take(pc.index_in(b, value_set=ids)).combine_chunks()
+             .to_batches()[0] for b in batches] for batches in tasks]
 
 
 def _plain(name, fn, *args, **kw):
@@ -265,18 +327,15 @@ def _mapper_body(mode: str):
     return body
 
 
-def _batches(path: str) -> list[pa.RecordBatch]:
+def extract_in_process(path: str, mode: str):
+    """``run_mode``'s mapper loop over a corpus in this process, all of it
+    one task, without Spark. A document's output does not depend on the
+    batch it is decoded in, so this pins the digest of any run over the
+    same corpus. Returns (output table, batch stats)."""
     from grobid_clinical_report_spark import pipeline
 
-    return [b for b in pipeline._coalesced(_row_group_batches(path))
-            if b.num_rows]
-
-
-def extract_in_process(path: str, mode: str):
-    """``run_mode``'s mapper loop over a corpus in this process. Returns
-    (output table, batch stats)."""
     body = _mapper_body(mode)
-    batches = _batches(path)
+    batches = list(pipeline._coalesced(_row_group_batches(path)))
     out = pa.Table.from_batches([body(b) for b in batches])
     return out, _batch_stats(batches)
 
@@ -294,14 +353,17 @@ def _batch_stats(batches) -> dict:
 IN_PROCESS_ROUNDS = 2
 
 
-def in_process_layers(corpus, mode: str):
-    """Untraced and traced in-process runs over the corpus, interleaved per
-    batch (order alternating) after one discarded pass, so the slow drift
-    of a shared box's speed falls on both sides alike. Returns (metrics,
-    untraced output, info); CPU figures are per pass."""
+def in_process_layers(tasks: list[list[pa.RecordBatch]], mode: str):
+    """Untraced and traced in-process runs over Spark's input batches
+    (``rebuild_batches``), coalesced per task as the mapper does, then
+    interleaved per batch (order alternating) after one discarded pass, so
+    the slow drift of a shared box's speed falls on both sides alike.
+    Returns (metrics, untraced output, info); CPU figures are per pass."""
+    from grobid_clinical_report_spark import pipeline
+
     body = _mapper_body(mode)
     c0 = time.process_time()
-    batches = _batches(corpus.docs)
+    batches = [b for task in tasks for b in pipeline._coalesced(iter(task))]
     coalesce = time.process_time() - c0
     for b in batches:  # lazy caches and the allocator fill here
         body(b)
@@ -334,7 +396,8 @@ def in_process_layers(corpus, mode: str):
     m.update(_batch_stats(batches))
     m["tokenize.tokens"] = rec.counted("tokenize.explode") / rounds
     m["viterbi.calls"] = rec.calls("viterbi") / rounds
-    layer_sum = sum(s.self_cpu for s in rec.spans) / rounds + coalesce
+    layer_sum = sum(s.self_cpu for s in rec.spans
+                    if s.name not in WRAPPER_LAYERS) / rounds + coalesce
     m["trace.overhead_pct"] = (traced - untraced) / untraced * 100
     m["trace.layer_sum_pct"] = layer_sum / untraced * 100
     return m, plain, {"untraced_cpu_s": untraced, "traced_cpu_s": traced}
@@ -456,14 +519,14 @@ def traced(workload: str, seed: int, seconds: float, work_dir: str,
     m["session.warmup_s"] = setup.warmup_s
     try:
         if workload == "full_job":
-            spark_digest, want = _traced_job(spark, corpus, work_dir, check,
-                                             m)
+            spark_digest, batch_ids = _traced_job(spark, corpus, work_dir,
+                                                  check, m)
         else:
             spark_digest = wl.verify_scan(spark, corpus, workload, check)
-            want = None
             with StageMetrics(spark) as sm:
                 wl.scan_pass(spark, corpus, mode)
             m.update(_pipeline_metrics(sm.collect()))
+            batch_ids = spark_batch_ids(wl.scan_df(spark, corpus))
         m["pipeline.boundary_s"] = boundary_pass(spark, corpus)
         if workload == "full_scan":
             dps4 = wl.timed_loop(
@@ -475,12 +538,10 @@ def traced(workload: str, seed: int, seconds: float, work_dir: str,
         m["scaling_eff"] = dps4 / (wl.CPUS * local1_docs_per_s(
             workload, seed, seconds))
 
-    layer_m, out, info = in_process_layers(corpus, mode)
+    table = corpus.table().select(["doc_id", "spans"])
+    layer_m, out, info = in_process_layers(
+        rebuild_batches(table, batch_ids), mode)
     m.update(layer_m)
-    if want is not None:  # the job writes only documents under the cap
-        import pyarrow.compute as pc
-
-        out = out.filter(pc.is_in(out.column("doc_id"), want))
     if verify.digest(out) != spark_digest:
         check.fail_all("in-process output digest differs from Spark's")
     for note in check.notes:
@@ -495,12 +556,24 @@ def _pipeline_metrics(sm: dict) -> dict:
 
 def _traced_job(spark, corpus, work_dir: str, check: verify.Check,
                 m: dict):
-    """One traced fresh job, then the checked resume leg."""
+    """One traced fresh job, then the checked resume leg. Returns the
+    output digest and the input batches of every bucket's mapper
+    (``spark_batch_ids`` of the DataFrames the job hands ``run_mode``:
+    guardrailed and salted, so without the quarantined whales)."""
     from grobid_clinical_report_spark import manifest as mf
+    from grobid_clinical_report_spark import runner
     from pyspark.sql.readwriter import DataFrameWriter
 
     rec = Recorder()
     patch_sites(rec, JOB_SITES)
+    mapped = []
+    orig_run_mode = runner.run_mode
+
+    def run_mode(df, mode):
+        mapped.append(df)
+        return orig_run_mode(df, mode)
+
+    runner.run_mode = run_mode
     orig_parquet = DataFrameWriter.parquet
 
     def parquet(self, path, *args, **kw):
@@ -516,10 +589,13 @@ def _traced_job(spark, corpus, work_dir: str, check: verify.Check,
         with StageMetrics(spark) as sm:
             job.run()
         stage = sm.collect()
+        runner.run_mode = orig_run_mode
         n_fresh = len(rec.spans)
         digest = wl.verify_job(spark, corpus, job.out, job.metrics, check)
         v = wl.resume_leg(spark, corpus, job.out, digest, check)
+        batch_ids = [t for df in mapped for t in spark_batch_ids(df)]
     finally:
+        runner.run_mode = orig_run_mode
         DataFrameWriter.parquet = orig_parquet
         rec.unpatch()
     fresh_spans, resume_spans = rec.spans[:n_fresh], rec.spans[n_fresh:]
@@ -544,7 +620,7 @@ def _traced_job(spark, corpus, work_dir: str, check: verify.Check,
         "resume_s": v["resume_s"],
     })
     job.clean()
-    return digest, wl.job_input_ids(corpus)
+    return digest, batch_ids
 
 
 def _output_bytes(out: str) -> int:

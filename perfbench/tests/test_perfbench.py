@@ -10,6 +10,7 @@ import os
 import sys
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -88,6 +89,26 @@ def test_in_process_driver_passes_fixtures(work):
         assert verify.fixture_failures(
             out, datagen.FIXTURE_EXPECTED[mode]) == []
         assert stats["pipeline.batches"] >= 1
+
+
+def test_spark_batches_rebuild_in_arrival_order(work):
+    """Probe rows (task, batch, row, doc_id) in any order give back each
+    task's batches, documents in arrival order, with the corpus columns."""
+    c = corpus_mod.Corpus(work, 7)
+    table = c.table().select(["doc_id", "spans"])
+    ids = table.column("doc_id").to_pylist()
+    layout = {3: [ids[5:9], ids[0:2]], 1: [ids[20:23]]}
+    rows = [{"task": t, "batch": b, "row": r, "doc_id": d}
+            for t, batches in layout.items()
+            for b, docs in enumerate(batches)
+            for r, d in enumerate(docs)]
+    tagged = pa.Table.from_pylist(rows[::-1])
+    tasks = layers.rebuild_batches(table, layers.group_tagged(tagged))
+    got = [[b.column("doc_id").to_pylist() for b in task] for task in tasks]
+    assert got == [layout[1], layout[3]]
+    assert tasks[0][0].schema == table.schema
+    first = table.filter(pc.equal(table.column("doc_id"), ids[5]))
+    assert tasks[1][0].slice(0, 1).to_pylist() == first.to_pylist()
 
 
 def test_recorder_self_time_subtracts_children():
