@@ -176,11 +176,13 @@ def _mask_any(offs: np.ndarray, mask: np.ndarray) -> np.ndarray:
 
 def _mask_or(offs: np.ndarray, mask: np.ndarray) -> np.ndarray:
     """Per-string 'any True byte' for DENSE masks: logical_or.reduceat
-    (~2 ms on a 6 MB buffer vs ~20 ms flatnonzero when most bytes hit).
-    Caller guarantees len(mask) > 0."""
-    starts = np.minimum(offs[:-1], len(mask) - 1)
-    out = np.logical_or.reduceat(mask, starts)
-    out[offs[:-1] == offs[1:]] = False  # reduceat misreports empties
+    (~2.6 ms on a 6 MB buffer vs ~20 ms flatnonzero when most bytes hit).
+    It reduces over the starts of the non-empty strings only: their starts
+    are strictly increasing, and each segment runs to the next non-empty
+    start (or the buffer end), i.e. exactly that string's bytes."""
+    out = np.zeros(len(offs) - 1, dtype=bool)
+    ne = offs[:-1] != offs[1:]
+    out[ne] = np.logical_or.reduceat(mask, offs[:-1][ne])
     return out
 
 

@@ -17,8 +17,27 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .schema import MANIFEST_SCHEMA
+
+
+def arrow_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """A small driver-side frame built from an Arrow table. The table goes
+    to the JVM as one batch, so the frame has one partition (none when
+    empty) and writing it starts no Python worker; a Python list would be
+    parallelized into defaultParallelism Python tasks, each with a fixed
+    CPU cost, mostly to write nothing."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def manifest_path(output_path: str) -> str:
@@ -30,7 +49,7 @@ def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(p)
     except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return arrow_frame(spark, [], MANIFEST_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:
@@ -85,7 +104,7 @@ def commit_bucket(
             int(config["max_spans"]),
         )
     ]
-    spark.createDataFrame(row, MANIFEST_SCHEMA).write.mode("append").parquet(
+    arrow_frame(spark, row, MANIFEST_SCHEMA).write.mode("append").parquet(
         manifest_path(output_path)
     )
 
@@ -123,9 +142,9 @@ def check_compatible(
 def reset(spark: SparkSession, output_path: str) -> None:
     """Clear the manifest (full-recompute entry point): overwrite with an
     empty dataset so stale 'done' rows can't shadow the new run."""
-    spark.createDataFrame([], MANIFEST_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(manifest_path(output_path))
+    arrow_frame(spark, [], MANIFEST_SCHEMA).write.mode("overwrite").parquet(
+        manifest_path(output_path)
+    )
 
 
 def new_run_id() -> str:

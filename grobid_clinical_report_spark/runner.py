@@ -9,13 +9,16 @@ Scale design (the 100 TB story):
 - **Guardrails (S4)**: documents over `max_spans` go to a quarantine sink with
   a metric row instead of poisoning a task (the reference rejects >300k-block
   PDFs for the same reason, MedicalReportSegmenterParser.java:136-139,250-253).
-- **Skew**: the extraction cost is ~linear in span count, so instead of
-  hash-partitioning blindly we split each bucket into a salted number of
-  tasks: heavy docs (top size tier) are spread round-robin by a salt derived
-  from hash(doc_id) so no task gets two whales; AQE can't help a map-only
-  stage, salting at the repartition does.
-- **Shuffle count**: exactly one repartition per bucket (to spread work);
-  the cascade itself is a single mapInPandas — no other exchange.
+- **Tasks**: every pyspark Python task has a fixed CPU cost before its
+  first row, so a bucket gets only the tasks its share of the cores can
+  run: ``defaultParallelism // buckets in flight``. When the pool alone
+  fills the cores that is one task, a coalesce with no exchange; the
+  cascade itself is one mapInArrow with no exchange either.
+- **Skew**: with more than one task per bucket, extraction cost is ~linear
+  in span count, so instead of hash-partitioning blindly each bucket is
+  split by a salt: heavy docs (top size tier) get a round-robin salt so no
+  task gets two whales, light docs a hash independent of the bucket hash.
+  AQE can't help a map-only stage, salting at the one repartition does.
 - **Resume**: per-bucket overwrite + manifest append (see manifest.py).
 """
 
@@ -26,12 +29,14 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import manifest as mf
 from .pipeline import run_mode
 
 DEFAULT_MAX_SPANS = 50_000
 HEAVY_SPANS = 5_000
+_STAGING_META_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -60,23 +65,43 @@ def split_guardrail(
     )
 
 
+def _partition_keys(spark: SparkSession, tasks: int) -> list[int]:
+    """For each partition p < ``tasks``, a long key that
+    ``repartition(tasks, key)`` sends to p. The partitioner hashes its key,
+    so partitioning by a salt in [0, tasks) itself collides salts (at
+    tasks=2 salts 0 and 1 share a partition); asking Spark's own hash
+    (one JVM-only job over a few ids) keeps the salt→partition map exact."""
+    first: dict[int, int] = {}
+    for r in (
+        spark.range(0, 64 * tasks, 1, 1)
+        .select("id", F.pmod(F.hash("id"), F.lit(tasks)).alias("p"))
+        .collect()
+    ):
+        first.setdefault(r["p"], r["id"])
+    return [first[p] for p in range(tasks)]
+
+
 def salt_partition(df: DataFrame, tasks: int) -> DataFrame:
     """Spread documents across ``tasks`` partitions with whale spreading.
 
-    Light docs hash anywhere. Heavy docs (> HEAVY_SPANS spans) get a TRUE
-    round-robin salt — row_number over the (small, guardrail-bounded) heavy
-    id set, mod ``tasks`` — broadcast-joined back, so heavy docs are spread
-    evenly across salt values (≤ ceil(H/tasks) whales per salt, not the
-    independent-hash collisions of round 1). The salt→partition step is
-    still a hash partitioning, so co-location of two salts is possible but
-    probabilistically bounded; exact isolation would need a custom
-    partitioner, and the guardrail already caps a whale at max_spans.
-    The heavy set is tiny by construction (whales are the size-distribution
-    tail and hard-capped by the guardrail), so the broadcast is safe.
-    One explicit shuffle; the map stage after it is shuffle-free.
+    Each partition is one Python task, and every task has a fixed CPU cost
+    before its first row, so callers size ``tasks`` to the cores free for
+    this frame. ``tasks == 1`` is a plain ``coalesce(1)``: no exchange and
+    no heavy-id subquery.
+
+    Otherwise light docs get the salt ``pmod(hash(doc_id), tasks)``: the
+    murmur3 ``hash`` is independent of the ``xxhash64`` bucket hash, so one
+    bucket's documents spread over every salt. Heavy docs (> HEAVY_SPANS
+    spans) get a round-robin salt — row_number over the (small,
+    guardrail-bounded) heavy id set, mod ``tasks`` — broadcast-joined back.
+    Each salt value goes to its own partition (_partition_keys), so a task
+    holds at most ceil(H/tasks) whales. One explicit shuffle; the map
+    stage after it is shuffle-free.
     """
     from pyspark.sql.window import Window
 
+    if tasks == 1:
+        return df.coalesce(1)
     heavy_ids = (
         df.filter(F.size("spans") > HEAVY_SPANS)
         .select("doc_id")
@@ -96,14 +121,17 @@ def salt_partition(df: DataFrame, tasks: int) -> DataFrame:
             % tasks,
         )
     )
-    salted = df.join(F.broadcast(heavy_ids), "doc_id", "left").withColumn(
-        "_salt",
-        F.coalesce(
-            F.col("_heavy_salt").cast("long"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(tasks)),
-        ),
+    salt = F.coalesce(
+        F.col("_heavy_salt"), F.pmod(F.hash("doc_id"), F.lit(tasks))
     )
-    return salted.repartition(tasks, "_salt").drop("_salt", "_heavy_salt")
+    # the keys are longs: the partitioner hashes an int differently
+    keys = F.array(
+        *[F.lit(k) for k in _partition_keys(df.sparkSession, tasks)]
+    ).cast("array<bigint>")
+    salted = df.join(F.broadcast(heavy_ids), "doc_id", "left").withColumn(
+        "_key", F.element_at(keys, salt + 1)
+    )
+    return salted.repartition(tasks, "_key").drop("_key", "_heavy_salt")
 
 
 def stage_bucketed_input(
@@ -162,9 +190,10 @@ def stage_bucketed_input(
     ).parquet(staged_path)
     # written AFTER the overwrite (which clears the directory) so a partial
     # write can never leave a matching sidecar without matching data
-    spark.createDataFrame(
-        [(json.dumps(want_meta, sort_keys=True),)], "value string"
-    ).coalesce(1).write.mode("overwrite").text(meta_dir)
+    meta = [(json.dumps(want_meta, sort_keys=True),)]
+    mf.arrow_frame(spark, meta, _STAGING_META_SCHEMA).write.mode(
+        "overwrite"
+    ).text(meta_dir)
 
 
 def run_extraction_job(
@@ -173,7 +202,6 @@ def run_extraction_job(
     output_path: str,
     mode: str = "extract_full",
     n_buckets: int = 8,
-    tasks_per_bucket: int | None = None,
     max_spans: int = DEFAULT_MAX_SPANS,
     resume: bool = True,
     max_concurrent: int = 4,
@@ -190,6 +218,12 @@ def run_extraction_job(
     buckets). Manifest appends are serialized under a lock — two jobs
     sharing one parquet append path would race in the output-committer
     temporary directory; the append itself is milliseconds.
+
+    Each bucket runs in ``max(1, defaultParallelism // in_flight)`` Python
+    tasks, ``in_flight = min(max_concurrent, pending buckets)``: every
+    Python task has a fixed CPU cost before its first row, so a bucket gets
+    only its share of the cores. When the pool alone fills the cores that
+    is one task per bucket and no shuffle (salt_partition).
 
     ``stage_buckets=True`` materializes a bucket-partitioned copy of the
     input first (stage_bucketed_input) so each bucket job scans 1/N of the
@@ -213,7 +247,6 @@ def run_extraction_job(
     from .io import read_documents, write_spans
 
     run_id = mf.new_run_id()
-    tasks = tasks_per_bucket or spark.sparkContext.defaultParallelism
     if stage_buckets:
         staged = os.path.join(output_path, "_staged_input")
         stage_bucketed_input(
@@ -246,6 +279,8 @@ def run_extraction_job(
         # over stale bucket/quarantine dirs — each bucket below overwrites)
         mf.reset(spark, output_path)
         pending = list(range(n_buckets))
+    workers = max(1, min(max_concurrent, len(pending)))
+    tasks = max(1, spark.sparkContext.defaultParallelism // workers)
 
     lock = threading.Lock()
     state = {"active": 0, "peak": 0}
@@ -299,7 +334,6 @@ def run_extraction_job(
     totals = {"buckets_run": 0, "docs": 0, "spans": 0, "quarantined": 0}
     t_all = time.monotonic()
     if pending:
-        workers = max(1, min(max_concurrent, len(pending)))
         with ThreadPoolExecutor(max_workers=workers) as ex:
             for n_docs, n_spans, n_q in ex.map(run_bucket, pending):
                 totals["buckets_run"] += 1

@@ -590,6 +590,29 @@ def test_byte_kernels_match_re2():
     assert at.any_digit(empty).tolist() == []
 
 
+def test_mask_or_matches_mask_any():
+    """The dense reduceat path answers 'any True byte per string' exactly
+    like the sparse searchsorted path, including runs of empty strings
+    before, between and after the non-empty ones (ADVICE: trailing empties
+    used to clip the last non-empty string's final byte)."""
+    import numpy as np
+
+    from grobid_clinical_report_spark.kernels import arrowtext as at
+
+    rng = np.random.default_rng(11)
+    for _ in range(3000):
+        n = int(rng.integers(1, 12))
+        lens = rng.integers(0, 4, n) * (rng.random(n) < 0.6)
+        offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
+        mask = rng.random(int(offs[-1])) < rng.choice([0.1, 0.5, 0.9])
+        np.testing.assert_array_equal(
+            at._mask_or(offs, mask), at._mask_any(offs, mask)
+        )
+    offs = np.array([0, 4, 4, 4])  # ['XYZa', '', ''] with an a-z mask
+    mask = np.array([False, False, False, True])
+    assert at._mask_or(offs, mask).tolist() == [True, False, False]
+
+
 def test_np_parts_matches_re2():
     """The numpy TOKEN_RE tokenization kernel (digit-free fast path of
     explode_tokens) produces part lists identical to RE2

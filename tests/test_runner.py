@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -28,7 +29,17 @@ def test_guardrail_split(spark, input_path):
     assert ok.count() == df.count() - 1
 
 
-def test_salt_partition_isolates_whales(spark, input_path):
+def _rows_per_partition(df) -> list[int]:
+    """Row counts of the non-empty partitions of ``df``."""
+    return [
+        r["count"]
+        for r in df.groupBy(F.spark_partition_id().alias("pid"))
+        .count()
+        .collect()
+    ]
+
+
+def test_salt_partition_isolates_whales(spark, input_path, monkeypatch):
     df = spark.read.parquet(input_path)
     tasks = 4
     salted = runner.salt_partition(df, tasks)
@@ -44,6 +55,30 @@ def test_salt_partition_isolates_whales(spark, input_path):
     )
     assert heavy_per_part is None or heavy_per_part <= 1
 
+    # each salt value owns one partition: with a lower heavy tier the 10
+    # docs over 190 spans spread at most ceil(10 / 4) = 3 to a task (salts
+    # 0-3, hashed again by the partitioner, used to share partitions)
+    monkeypatch.setattr(runner, "HEAVY_SPANS", 190)
+    salted = runner.salt_partition(df, tasks)
+    n_heavy = df.filter(F.size("spans") > 190).count()
+    assert n_heavy == 10
+    assert max(_rows_per_partition(salted.filter(F.size("spans") > 190))) <= 3
+    monkeypatch.undo()
+
+    # one bucket's documents spread too: the light salt's hash is
+    # independent of the xxhash64 bucket hash, which would put them all on
+    # one salt whenever tasks divides the bucket count
+    one = runner.with_bucket(df, 8).filter("bucket = 0").drop("bucket")
+    assert len(_rows_per_partition(runner.salt_partition(one, 4))) > 1
+    assert len(_rows_per_partition(runner.salt_partition(one, 2))) == 2
+
+    # one task is a plain coalesce: no exchange, no heavy-id subquery
+    single = runner.salt_partition(df, 1)
+    assert single.rdd.getNumPartitions() == 1
+    plan = single._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert single.count() == df.count()
+
 
 def test_job_runs_and_resumes_idempotently(spark, input_path, tmp_path):
     out = str(tmp_path / "out")
@@ -55,6 +90,10 @@ def test_job_runs_and_resumes_idempotently(spark, input_path, tmp_path):
     # the bucket jobs actually overlapped (driver-side thread pool): the
     # cluster is never idle between per-bucket jobs
     assert m1["peak_concurrency"] >= 2
+    # one Arrow-built manifest row per commit = one parquet file per
+    # bucket (a list-built row was parallelized into several files)
+    parts = glob.glob(os.path.join(mf.manifest_path(out), "*.parquet"))
+    assert len(parts) == 4
     first = {
         r["doc_id"]: r["spans"]
         for r in runner.read_extracted(spark, out).collect()
@@ -132,7 +171,6 @@ def test_stale_staging_restaged_on_param_change(spark, input_path, tmp_path):
     sidecar (a 1-row text dataset written through Spark, so it lives on the
     same filesystem as the staged data — ADVICE r4) pins
     (n_buckets, input_path) exactly."""
-    import glob
     import json
 
     def read_meta(staged_dir):
@@ -220,6 +258,9 @@ def test_quarantine_cleared_on_recompute(spark, input_path, tmp_path):
         spark, input_path, out, n_buckets=2, max_spans=100_000, resume=False
     )
     assert m2["quarantined"] == 0
+    # reset's empty file plus one file per committed bucket
+    parts = glob.glob(os.path.join(mf.manifest_path(out), "*.parquet"))
+    assert len(parts) == 1 + 2
     q = spark.read.parquet(os.path.join(out, "_quarantine", "bucket=*"))
     assert q.count() == 0
 
