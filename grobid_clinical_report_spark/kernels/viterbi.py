@@ -9,25 +9,44 @@ real linear-chain Viterbi decode in numpy, with transition/emission weights fit
 offline against the fixture corpus (SURVEY.md §7.0).
 
 Vectorization contract ("never per-row Python", BASELINE.json north_star):
-sequences from a whole Arrow batch of documents are padded into one
-(n_seqs, max_len, n_labels) tensor; the only Python loop is over *time steps*
-(bounded by the longest sequence in a length-bucket, not by row count). Docs
-are bucketed by length so one pathological 50k-line document doesn't force
-50k iterations on the ~120-line median docs (skew guardrails cap length
+sequences from a whole Arrow batch of documents are packed into
+(n_seqs, max_len, n_labels) blocks; the only Python loop is over *time steps*
+(bounded by the longest sequence in a block, not by row count). Docs are
+grouped by length so one pathological 50k-line document doesn't force 50k
+iterations on the ~120-line median docs (skew guardrails cap length
 upstream — MedicalReportSegmenterParser.java:250-253 analogue).
+
+Cost model: a block of B lanes, T steps and L labels costs T × (numpy calls
+per step), each call paying ~1 µs of dispatch on top of its arithmetic.
+There are two forward steps:
+
+- the general O(L²) step: ~5 calls (fill a (B, L, L) scores buffer,
+  argmax, one flat gather, emission add, backpointer write), B·L² cells;
+- _step_structured, for column-structured transitions: O(B·L) cells but
+  ~30 calls.
+
+The step is picked per block by its size, not by the transition shape: a
+block of at most _GENERAL_MAX_CELLS = B·L² cells takes the general step,
+a wider column-structured block the structured one. A whale document
+(B = 2, T ≈ 20k, L = 12) decodes at ~8 µs per step instead of ~30 µs,
+while NER's thousands-of-lane blocks keep the O(L) step.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-_LEN_BUCKETS = (16, 64, 256, 1024, 4096, 16384, 65536, 1 << 30)
-
 # viterbi_segments: lengths up to this decode dense (zero padding); longer
 # segments decode in padded geometric buckets (see the docstring's cost
 # model — the crossover is where per-length numpy call overhead on small
 # (B, L) blocks outgrows the ≤2× padded-work bound of factor-2 buckets)
 _DENSE_MAX_T = 64
+
+# Step rule: blocks of at most this many B·L² cells take the general step
+# even when the transitions are column-structured. Per-step A/B on padded
+# blocks put the crossover between the two steps near 8k cells at L = 12
+# (f32), 16 (f32) and 30 (int16).
+_GENERAL_MAX_CELLS = 8192
 
 
 def _acc_dtype(em_dtype: np.dtype) -> np.dtype:
@@ -45,41 +64,6 @@ def _acc_dtype(em_dtype: np.dtype) -> np.dtype:
     if np.issubdtype(em_dtype, np.integer):
         return np.promote_types(em_dtype, np.int32)
     return np.dtype(em_dtype)
-
-
-def viterbi_single(emissions: np.ndarray, transitions: np.ndarray) -> np.ndarray:
-    """Decode one sequence: emissions (T, L), transitions (L, L) → labels (T,)."""
-    return viterbi_batch([emissions], transitions)[0]
-
-
-def viterbi_batch(
-    emission_list: list[np.ndarray], transitions: np.ndarray
-) -> list[np.ndarray]:
-    """Decode many sequences with shared transitions.
-
-    emission_list: per-sequence (T_i, L) float arrays.
-    Returns per-sequence int label-index arrays (argmax path).
-    """
-    n = len(emission_list)
-    if n == 0:
-        return []
-    lengths = np.array([e.shape[0] for e in emission_list], dtype=np.int64)
-    out: list[np.ndarray | None] = [None] * n
-
-    # group into length buckets so padding waste stays bounded
-    buckets = np.searchsorted(np.array(_LEN_BUCKETS), lengths, side="left")
-    for b in np.unique(buckets):
-        idx = np.where((buckets == b) & (lengths > 0))[0]
-        if idx.size == 0:
-            continue
-        max_t = int(lengths[idx].max())
-        labs = _decode_padded([emission_list[i] for i in idx], max_t, transitions)
-        for j, i in enumerate(idx):
-            out[i] = labs[j][: lengths[i]]
-    for i in range(n):
-        if out[i] is None:  # zero-length sequences
-            out[i] = np.zeros(0, dtype=np.int64)
-    return out  # type: ignore[return-value]
 
 
 def viterbi_segments(
@@ -104,8 +88,16 @@ def viterbi_segments(
       line documents, hundreds of DISTINCT lengths) would otherwise decode
       as thousands of tiny per-length numpy steps where call overhead
       dominates — measured 5.9s → 9.2s on the extraction cascade when
-      everything ran dense. Buckets are built by one vectorized scatter
-      (no per-sequence Python fill, unlike viterbi_batch).
+      everything ran dense. Buckets are built by one vectorized scatter.
+
+    Each block then costs (its step count) × (numpy calls per step): the
+    transition structure is probed once per call, and each block takes
+    the ~5-call general step when B·L² ≤ _GENERAL_MAX_CELLS, else the
+    ~30-call O(L) structured step if the matrix allows it (module
+    docstring). Both steps take the max of the same sums dp[p] +
+    trans[p, c] with first-index ties, so the choice never changes labels
+    when those sums are exact: integer dtypes, or float matrices whose
+    off-diagonal moves add exactly (every shipped matrix moves at 0).
     """
     n, n_lab = em.shape
     if n == 0:
@@ -114,6 +106,7 @@ def viterbi_segments(
     # f64-transitions DP silently promotes every step (measured 1.47s →
     # 2.02s on the corpus-NER segment set)
     transitions = np.asarray(transitions, dtype=em.dtype)
+    move = _col_move(transitions)
     starts = np.asarray(starts, dtype=np.int64)
     lengths = np.diff(np.append(starts, n))
     order = np.argsort(lengths, kind="stable")
@@ -140,8 +133,8 @@ def viterbi_segments(
         if t_len <= _DENSE_MAX_T:
             width = t_len * k
             block = em2[pos : pos + width].reshape(k, t_len, n_lab)
-            out_sorted[pos : pos + width] = _decode_dense(
-                block, transitions
+            out_sorted[pos : pos + width] = _decode(
+                block, None, transitions, move
             ).ravel()
             pos += width
             seg0 += k
@@ -168,7 +161,7 @@ def viterbi_segments(
         pad[local_seg, intra_b] = em2[rows]
         live = np.zeros((k, t_max), dtype=bool)
         live[local_seg, intra_b] = True
-        labs = _dp_padded(pad, live, transitions)
+        labs = _decode(pad, live, transitions, move)
         out_sorted[rows] = labs[local_seg, intra_b]
         pos += width
         seg0 += k
@@ -216,18 +209,18 @@ def _col_move(transitions: np.ndarray):
 # full-batch buffer runs to hundreds of MB and every step streams it
 # through memory three times (fill, argmax, gather); tiling rows so the
 # buffer sits in cache turned a 32.7s sf0.1 trained-NER decode into the
-# numbers in BENCH/TRAINER.md. Structured matrices never tile — their
-# step materializes no (B, L, L) tensor to begin with.
+# numbers in BENCH/TRAINER.md. Blocks on the structured step never tile —
+# it materializes no (B, L, L) tensor to begin with.
 _GENERAL_TILE_BYTES = 4 << 20
-
-
-def _general_rows(n_lab: int, itemsize: int) -> int:
-    return max(256, _GENERAL_TILE_BYTES // (n_lab * n_lab * itemsize))
 
 
 def _step_structured(dp, mv, scalar, diag, col, rows, neg):
     """One structured Viterbi step: (best_score, best_prev) before emission
     add / masking. Tie resolution replicates np.argmax's first-index rule.
+
+    O(B·L) work but ~30 numpy calls, against the general step's B·L² work
+    in ~5 calls: it only pays off on blocks wider than _GENERAL_MAX_CELLS
+    (NER's thousands of lanes), where the arithmetic outweighs the calls.
 
     Materializes no (B, L) candidate tensors beyond the score update
     itself: the best/second-best predecessors are the top-2 of dp, every
@@ -264,43 +257,63 @@ def _step_structured(dp, mv, scalar, diag, col, rows, neg):
     return best, best_prev
 
 
-def _decode_dense(emis: np.ndarray, transitions: np.ndarray) -> np.ndarray:
-    """Batched Viterbi over a dense (B, T, L) tensor — no padding/mask.
-    Shares the structured (sticky-transition) O(L) fast path with
-    _decode_padded; tie resolution is argmax-first-index in both.
+def _decode(
+    emis: np.ndarray, mask: np.ndarray | None, transitions: np.ndarray, move
+) -> np.ndarray:
+    """Batched Viterbi over a (B, T, L) block → (B, T) labels.
 
-    The structured step is _step_structured (top-2 of dp + one fix-up
-    column); column-structured matrices (body model: per-label entry
-    costs) take it too, with a vector move."""
+    mask None: a dense block, every lane live for all T steps. Otherwise
+    mask (B, T) marks the live cells of a padded block (each lane a live
+    prefix); padding lanes neither move dp nor write backpointers, and
+    padding positions of the result hold arbitrary values (callers gather
+    only live cells). move is _col_move(transitions); the step follows
+    the B·L² rule (module docstring). Ties resolve to the first
+    predecessor index (np.argmax's rule) on both steps."""
     b, max_t, n_lab = emis.shape
-    # general-transition blocks decode in row tiles (rows are independent;
-    # bit-identical to the unsplit decode) so the per-step scores buffer
-    # stays cache-resident — see _GENERAL_TILE_BYTES
-    if _col_move(transitions)[0] is None:
-        tile = _general_rows(n_lab, emis.dtype.itemsize)
+    mv, scalar = move
+    structured = mv is not None and b * n_lab * n_lab > _GENERAL_MAX_CELLS
+    acc = _acc_dtype(emis.dtype)
+    # general-step blocks decode in row tiles (rows are independent;
+    # bit-identical to the unsplit decode, and a tile's shortest lane only
+    # ever masks fewer steps) so the per-step scores buffer stays
+    # cache-resident — see _GENERAL_TILE_BYTES
+    if not structured:
+        tile = max(256, _GENERAL_TILE_BYTES // (n_lab**2 * acc.itemsize))
         if b > tile:
             out = np.empty((b, max_t), dtype=np.int64)
             for lo in range(0, b, tile):
-                out[lo : lo + tile] = _decode_dense(
-                    emis[lo : lo + tile], transitions
+                sub = None if mask is None else mask[lo : lo + tile]
+                out[lo : lo + tile] = _decode(
+                    emis[lo : lo + tile], sub, transitions, move
                 )
             return out
-    # Integer emissions: dp may keep the narrow int16 dtype ONLY when a
-    # per-block bound proves it cannot wrap — |dp| ≤ max_t · (max|em| +
-    # max|trans|), checked against the sentinel headroom (2^14). The dense
-    # path handles ≤64-step blocks (the NER corpus shape), so the check
-    # almost always passes and the int16 dp bandwidth win is kept; blocks
-    # that could overflow accumulate in int32 (_acc_dtype). The bound
-    # costs two allocation-free reduction passes over a block about to be
-    # read max_t times.
-    acc = emis.dtype
-    if np.issubdtype(emis.dtype, np.integer):
-        step = max(int(emis.max()), -int(emis.min()), 0) + max(
-            int(np.max(transitions)), -int(np.min(transitions)), 0
-        )
-        safe16 = emis.dtype == np.int16 and max_t * step < (1 << 14) - 64
-        acc = emis.dtype if safe16 else _acc_dtype(emis.dtype)
-    dp = emis[:, 0, :].astype(acc, copy=True)
+    if mask is None:
+        last_t = None
+        min_len = max_t
+        # Dense int16 emissions: dp may keep the narrow int16 dtype ONLY
+        # when a per-block bound proves it cannot wrap — |dp| ≤ max_t ·
+        # (max|em| + max|trans|), checked against the sentinel headroom
+        # (2^14). Dense blocks are ≤64 steps (the NER corpus shape), so the
+        # check almost always passes and the int16 dp bandwidth win is
+        # kept; blocks that could overflow accumulate in int32
+        # (_acc_dtype). The bound costs two allocation-free reduction
+        # passes over a block about to be read max_t times.
+        if emis.dtype == np.int16:
+            per_step = max(int(emis.max()), -int(emis.min()), 0) + max(
+                int(np.max(transitions)), -int(np.min(transitions)), 0
+            )
+            if max_t * per_step < (1 << 14) - 64:
+                acc = emis.dtype
+    else:
+        last_t = mask.sum(axis=1) - 1
+        # steps below the shortest live length need no masking: every lane
+        # is alive. Factor-2 buckets guarantee min_len ≥ max_t/2, and
+        # equal-length blocks (the whale documents) mask no step at all.
+        min_len = int(last_t.min()) + 1
+    # transitions and dp in the accumulator dtype; emission gathers keep
+    # the caller's dtype
+    transitions = np.asarray(transitions, dtype=acc)
+    dp = emis[:, 0, :].astype(acc, copy=True)  # (B, L)
     # int8 backpointers when labels fit (all current models: L ≤ 27):
     # back is the largest tensor the DP touches ((B, T, L), written every
     # step, read back once) — quartering its bytes matters on a
@@ -308,157 +321,54 @@ def _decode_dense(emis: np.ndarray, transitions: np.ndarray) -> np.ndarray:
     back = np.empty(
         (b, max_t, n_lab), dtype=np.int8 if n_lab <= 127 else np.int32
     )
-    neg = _neg_sentinel(dp.dtype)
 
-    mv, scalar = _col_move(transitions)
-    if mv is not None:
-        diag = np.diag(transitions)[None, :]
+    if structured:
+        diag = np.diag(transitions)[None, :]  # (1, L)
         col = np.arange(n_lab, dtype=np.int32)[None, :]
         rows = np.arange(b)
-        for t in range(1, max_t):
-            best, bt = _step_structured(dp, mv, scalar, diag, col, rows, neg)
-            back[:, t, :] = bt
-            dp = best + emis[:, t, :]
-    else:
-        # general O(L²) step: preallocated scores buffer + direct fancy
-        # gather (np.take_along_axis builds its index tuple in Python per
-        # call — profiled at ~0.8s over a 54k-step cascade decode).
-        # (B, dest, prev) layout: argmax runs over the CONTIGUOUS last
-        # axis — ~25% faster than the strided middle-axis argmax, with an
-        # identical first-predecessor tie-break (randomized-tie pytest)
-        trans_t = np.ascontiguousarray(transitions.T)[None, :, :]
-        scores = np.empty((b, n_lab, n_lab), dtype=dp.dtype)
-        rows_ix = np.arange(b)[:, None]
-        cols_ix = np.arange(n_lab)[None, :]
-        for t in range(1, max_t):
-            np.add(dp[:, None, :], trans_t, out=scores)
-            best_prev = scores.argmax(axis=2)
-            dp = scores[rows_ix, cols_ix, best_prev] + emis[:, t, :]
-            back[:, t, :] = best_prev
+        neg = _neg_sentinel(acc)
 
+        def step(dp):
+            return _step_structured(dp, mv, scalar, diag, col, rows, neg)
+
+    else:
+        # general O(L²) step: preallocated scores buffer in (B, dest, prev)
+        # layout — argmax runs over the CONTIGUOUS last axis, ~25% faster
+        # than the strided middle-axis argmax with an identical
+        # first-predecessor tie-break — and a flat gather of the winners
+        # (half the cost of a 3-index fancy gather at B = 2; faster than
+        # a second max pass over scores).
+        trans_t = np.ascontiguousarray(transitions.T)[None, :, :]
+        scores = np.empty((b, n_lab, n_lab), dtype=acc)
+        flat = scores.reshape(-1)
+        base = (np.arange(b * n_lab) * n_lab).reshape(b, n_lab)
+
+        def step(dp):
+            np.add(dp[:, None, :], trans_t, out=scores)
+            best_prev = scores.argmax(axis=2)  # (B, L)
+            return flat[base + best_prev], best_prev
+
+    for t in range(1, max_t):
+        best, best_prev = step(dp)
+        ndp = best + emis[:, t, :]
+        if t < min_len:
+            dp = ndp
+            back[:, t, :] = best_prev
+            continue
+        alive = mask[:, t, None]
+        dp = np.where(alive, ndp, dp)
+        back[:, t, :] = np.where(alive, best_prev, 0)
+
+    # backtrace, batched across lanes (the loop is over time steps only).
+    # Above the shortest lane's end a lane that has already ended carries
+    # its final label back unchanged; below it every lane is live and the
+    # chase is one gather per step.
     labels = np.empty((b, max_t), dtype=np.int64)
     cur = dp.argmax(axis=1)
     labels[:, max_t - 1] = cur
     rows = np.arange(b)
     for t in range(max_t - 1, 0, -1):
-        cur = back[rows, t, cur]
+        prev = back[rows, t, cur]
+        cur = prev if t < min_len else np.where(last_t >= t, prev, cur)
         labels[:, t - 1] = cur
-    return labels
-
-
-def _decode_padded(
-    seqs: list[np.ndarray], max_t: int, transitions: np.ndarray
-) -> np.ndarray:
-    """Pad to (B, max_t, L), run batched Viterbi, return (B, max_t) labels."""
-    b = len(seqs)
-    n_lab = transitions.shape[0]
-    neg = -1e30
-    # np.empty + per-row fill: each cell written once (np.full pre-fills
-    # the whole (B, T, L) tensor and the real rows overwrite it; measured
-    # ~1% of single-thread kernel wall — small, but strictly fewer writes)
-    emis = np.empty((b, max_t, n_lab), dtype=np.float64)
-    mask = np.zeros((b, max_t), dtype=bool)
-    for i, e in enumerate(seqs):
-        t = e.shape[0]
-        emis[i, :t] = e
-        emis[i, t:] = neg
-        mask[i, :t] = True
-    return _dp_padded(emis, mask, transitions)
-
-
-def _dp_padded(
-    emis: np.ndarray, mask: np.ndarray, transitions: np.ndarray
-) -> np.ndarray:
-    """Batched masked Viterbi over a prebuilt (B, max_t, L) tensor; padding
-    lanes (mask False) neither move dp nor write backpointers. Returns
-    (B, max_t) labels (padding positions hold arbitrary values — callers
-    gather only live cells)."""
-    b, max_t, n_lab = emis.shape
-    # transitions + dp in the accumulator dtype (== emis dtype for floats;
-    # int32 for integer emissions, whose int16 dp would wrap on long
-    # segments). Emission gathers keep the caller's dtype.
-    acc = _acc_dtype(emis.dtype)
-    transitions = np.asarray(transitions, dtype=acc)
-
-    # general-transition row tiling, as in _decode_dense (exact: rows are
-    # independent; per-tile min_len only ever masks MORE conservatively)
-    if _col_move(transitions)[0] is None:
-        tile = _general_rows(emis.shape[2], np.dtype(acc).itemsize)
-        if b > tile:
-            out = np.empty((b, max_t), dtype=np.int64)
-            for lo in range(0, b, tile):
-                out[lo : lo + tile] = _dp_padded(
-                    emis[lo : lo + tile], mask[lo : lo + tile], transitions
-                )
-            return out
-
-    # forward max-product
-    dp = emis[:, 0, :].astype(acc, copy=True)  # (B, L)
-    # int8 backpointers when labels fit — see _decode_dense
-    back = np.zeros(
-        (b, max_t, n_lab), dtype=np.int8 if n_lab <= 127 else np.int32
-    )
-
-    # structured fast path (_step_structured): constant-move (sticky) and
-    # column-structured (body model) matrices decompose the prev→next max
-    # to O(L) per step — the token-models-at-corpus-scale hot loop.
-    # steps below the shortest live length need no masking at all — every
-    # lane is alive, so dp/backpointer writes are unconditional. Factor-2
-    # buckets guarantee min_len ≥ max_t/2, so this skips the two
-    # np.where passes for at least half of all steps (and for ALL steps
-    # of equal-length buckets, e.g. the whale documents).
-    min_len = int(mask.sum(axis=1).min()) if b else max_t
-
-    mv, scalar = _col_move(transitions)
-    if mv is not None:
-        diag = np.diag(transitions)[None, :]  # (1, L)
-        col = np.arange(n_lab, dtype=np.int32)[None, :]
-        rows = np.arange(b)
-        neg = _neg_sentinel(transitions.dtype)
-        for t in range(1, max_t):
-            best_score, best_prev = _step_structured(
-                dp, mv, scalar, diag, col, rows, neg
-            )
-            if t < min_len:
-                dp = best_score + emis[:, t, :]
-                back[:, t, :] = best_prev
-                continue
-            ndp = best_score + emis[:, t, :]
-            alive = mask[:, t]
-            dp = np.where(alive[:, None], ndp, dp)
-            back[:, t, :] = np.where(alive[:, None], best_prev, 0)
-    else:
-        # general O(L²) step (segmenter: zone-order constraints make a few
-        # columns non-constant): preallocated scores buffer + direct fancy
-        # gather instead of np.take_along_axis's per-call Python indexing.
-        # (B, dest, prev) layout — contiguous-last-axis argmax, identical
-        # first-predecessor tie-break (see _decode_dense)
-        trans_t = np.ascontiguousarray(transitions.T)[None, :, :]
-        scores = np.empty((b, n_lab, n_lab), dtype=dp.dtype)
-        rows_ix = np.arange(b)[:, None]
-        cols_ix = np.arange(n_lab)[None, :]
-        for t in range(1, max_t):
-            np.add(dp[:, None, :], trans_t, out=scores)
-            best_prev = scores.argmax(axis=2)  # (B, L)
-            ndp = scores[rows_ix, cols_ix, best_prev] + emis[:, t, :]
-            if t < min_len:
-                dp = ndp
-                back[:, t, :] = best_prev
-                continue
-            alive = mask[:, t]
-            dp = np.where(alive[:, None], ndp, dp)
-            back[:, t, :] = np.where(alive[:, None], best_prev, 0)
-
-    # backtrace (batched across sequences; loop is over time steps only)
-    labels = np.zeros((b, max_t), dtype=np.int64)
-    last_t = mask.sum(axis=1) - 1  # (B,)
-    t_idx = np.arange(b)
-    cur_lab = dp.argmax(axis=1)
-    labels[t_idx, last_t] = cur_lab
-    for t in range(max_t - 1, 0, -1):
-        active = last_t >= t
-        prev_lab = back[t_idx, t, cur_lab]
-        new_lab = np.where(active, prev_lab, cur_lab)
-        labels[t_idx, t - 1] = np.where(active, new_lab, labels[t_idx, t - 1])
-        cur_lab = new_lab
     return labels

@@ -18,7 +18,7 @@ from grobid_clinical_report_spark.kernels.tokenize import (
     contiguous_pieces,
     explode_tokens,
 )
-from grobid_clinical_report_spark.kernels.viterbi import viterbi_batch
+from grobid_clinical_report_spark.kernels.viterbi import viterbi_segments
 
 
 # --- viterbi -----------------------------------------------------------------
@@ -35,18 +35,45 @@ def _brute(em, trans):
     return np.array(bp)
 
 
+def _ref_viterbi(em, trans):
+    """Plain per-sequence O(T·L²) Viterbi in float64, ties to the first
+    label index — the independent reference for viterbi_segments."""
+    T, L = em.shape
+    path = np.zeros(T, dtype=np.int64)
+    if T == 0:
+        return path
+    dp = em[0].astype(np.float64)
+    back = np.zeros((T, L), dtype=np.int64)
+    for t in range(1, T):
+        scores = dp[:, None] + trans  # (prev, cur)
+        back[t] = scores.argmax(axis=0)
+        dp = scores.max(axis=0) + em[t]
+    path[-1] = dp.argmax()
+    for t in range(T - 1, 0, -1):
+        path[t - 1] = back[t, path[t]]
+    return path
+
+
+def _segments_list(ems, trans):
+    """viterbi_segments over a list of (T_i, L) sequences, split back."""
+    lens = np.array([e.shape[0] for e in ems], dtype=np.int64)
+    starts = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
+    flat = viterbi_segments(np.concatenate(ems), starts, trans)
+    return np.split(flat, np.cumsum(lens)[:-1])
+
+
 def test_viterbi_matches_bruteforce():
     rng = np.random.default_rng(7)
     trans = rng.normal(size=(3, 3))
     ems = [rng.normal(size=(t, 3)) for t in [1, 2, 4, 6, 5, 3]]
-    got = viterbi_batch(ems, trans)
+    got = _segments_list(ems, trans)
     for e, g in zip(ems, got):
         assert np.array_equal(g, _brute(e, trans))
 
 
 def test_viterbi_empty_and_batching():
     trans = np.zeros((2, 2))
-    out = viterbi_batch([np.zeros((0, 2)), np.ones((3, 2))], trans)
+    out = _segments_list([np.zeros((0, 2)), np.ones((3, 2))], trans)
     assert len(out[0]) == 0 and len(out[1]) == 3
 
 
@@ -68,19 +95,15 @@ def test_viterbi_structured_shapes_optimal_and_consistent():
     """All three transition structures hit distinct decode branches
     (scalar top-2, vector-move top-2, general scores tensor); each must be
     score-optimal vs brute force, and the segments decoder (dense short /
-    bucketed-padded long) must agree exactly with viterbi_batch."""
-    from grobid_clinical_report_spark.kernels.viterbi import (
-        viterbi_segments,
-        viterbi_single,
-    )
-
+    bucketed-padded long) must agree exactly with the plain per-sequence
+    reference decoder."""
     rng = np.random.default_rng(11)
     for trial in range(24):
         L = int(rng.integers(2, 5))
         T = int(rng.integers(1, 6))
         em = rng.integers(-4, 5, size=(T, L)).astype(float)
         tr = _rand_transitions(rng, L, trial % 3)
-        got = viterbi_single(em, tr)
+        got = viterbi_segments(em, np.zeros(1, dtype=np.int64), tr)
         ts = np.arange(T)
         gs = em[ts, got].sum() + sum(tr[got[t - 1], got[t]] for t in range(1, T))
         want = _brute(em, tr)
@@ -105,11 +128,75 @@ def test_viterbi_structured_shapes_optimal_and_consistent():
             em[s : s + ln].astype(np.float64) for s, ln in zip(starts, lens)
         ]
         want = (
-            np.concatenate(viterbi_batch(seqs, tr))
+            np.concatenate([_ref_viterbi(e, tr) for e in seqs])
             if n
             else np.zeros(0, int)
         )
         assert np.array_equal(got, want), (trial, trial % 3)
+
+
+def test_viterbi_step_rule_branch_parity(monkeypatch):
+    """Blocks of at most _GENERAL_MAX_CELLS = B·L² cells take the general
+    step even for column-structured matrices; wider ones take the
+    structured step. Forcing every block onto one step (bound 0 → all
+    structured, huge → all general) must give identical labels for sticky
+    and column-structured matrices, with tie-heavy integer emissions in
+    float32/float64/int16, block widths on both sides of the default bound,
+    dense (≤64) and padded (>64) lengths — unequal within a bucket, so both
+    the masked and the all-live backtrace run — and a 2 × 3000 whale."""
+    from grobid_clinical_report_spark.kernels import viterbi as V
+
+    def forced(em, starts, tr):
+        out = []
+        for bound in (0, 1 << 62):
+            monkeypatch.setattr(V, "_GENERAL_MAX_CELLS", bound)
+            out.append(V.viterbi_segments(em, starts, tr))
+        monkeypatch.undo()
+        return out
+
+    rng = np.random.default_rng(29)
+    for trial in range(12):
+        L = int(rng.integers(2, 31))
+        dt = (np.float32, np.float64, np.int16)[trial % 3]
+        tr = _rand_transitions(rng, L, trial % 2).astype(dt)
+        assert V._col_move(tr)[0] is not None
+        # w lanes sit on the bound (general step), w + 1 just past it
+        w = max(1, V._GENERAL_MAX_CELLS // (L * L))
+        lens = np.concatenate([
+            np.full(w, 40), np.full(w + 1, 41),  # two dense blocks
+            [70], rng.integers(70, 141, size=w - 1),  # padded [70, 140]
+            [141], rng.integers(141, 283, size=w),  # padded [141, 282]
+        ])
+        rng.shuffle(lens)
+        starts = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
+        em = rng.integers(-2, 3, size=(int(lens.sum()), L)).astype(dt)
+        structured, general = forced(em, starts, tr)
+        np.testing.assert_array_equal(structured, general)
+        # the default rule: only the (w + 1)-lane blocks step structured
+        lanes = []
+        step = V._step_structured
+        monkeypatch.setattr(
+            V, "_step_structured",
+            lambda dp, *a: lanes.append(len(dp)) or step(dp, *a),
+        )
+        np.testing.assert_array_equal(
+            V.viterbi_segments(em, starts, tr), general
+        )
+        monkeypatch.undo()
+        assert set(lanes) == {w + 1}, (L, w, set(lanes))
+    # whale: one 2-lane block of 3000 steps, checked against the reference
+    L = 12
+    for kind, dt in ((0, np.float32), (1, np.int16)):
+        tr = _rand_transitions(rng, L, kind).astype(dt)
+        em = rng.integers(-2, 3, size=(6000, L)).astype(dt)
+        starts = np.array([0, 3000], dtype=np.int64)
+        structured, general = forced(em, starts, tr)
+        np.testing.assert_array_equal(structured, general)
+        want = np.concatenate([
+            _ref_viterbi(em[s : s + 3000].astype(np.float64), tr)
+            for s in starts
+        ])
+        np.testing.assert_array_equal(general, want)
 
 
 def test_viterbi_int16_long_segment_no_overflow():
@@ -359,7 +446,7 @@ def test_viterbi_path_is_valid_shape(shapes):
     rng = np.random.default_rng(0)
     n_lab = shapes[0][1]
     ems = [rng.normal(size=(t, n_lab)) for t, _ in shapes]
-    out = viterbi_batch(ems, np.zeros((n_lab, n_lab)))
+    out = _segments_list(ems, np.zeros((n_lab, n_lab)))
     for e, g in zip(ems, out):
         assert g.shape == (e.shape[0],)
         assert ((g >= 0) & (g < n_lab)).all()
